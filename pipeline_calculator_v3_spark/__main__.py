@@ -154,9 +154,12 @@ def _analyze(args: argparse.Namespace) -> int:
     if not args.no_kml:
         kml_dir = os.path.join(out, "corridors")
         os.makedirs(kml_dir, exist_ok=True)
-        # toLocalIterator streams one partition at a time to the driver —
-        # a corpus-scale sections table (the case --distributed-json
-        # exists for) must not re-materialize wholesale here (advice r10)
+        # toLocalIterator streams one partition of the cached sections
+        # table at a time into this process — a corpus-scale sections
+        # table (the case --distributed-json exists for) must not be
+        # collected wholesale here.  It runs one job per partition; AQE
+        # coalesced the cache's partitions by size (plans/overlap.py), so
+        # that is a few jobs, not spark.sql.shuffle.partitions of them
         for r in sections.toLocalIterator():
             write_corridor_kml(
                 r,

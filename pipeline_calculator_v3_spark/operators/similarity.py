@@ -501,8 +501,9 @@ def _pairs_cosine_arrow(
     (the NULLIF rule) and a NaN cosine KEEPS it (Spark orders NaN above
     every number, so NaN >= threshold is true — probed on 4.1.2).  Pairs
     of different vector lengths drop (zip_with NULL padding -> NULL dot);
-    vectors with NULL elements or NULL ids never pair (NULL folds / NULL
-    comparisons), reproduced by per-length grouping and row filters.
+    vectors with NULL elements, NULL ids or NULL norms never pair (NULL
+    folds / NULL comparisons / NULL cosines), reproduced by per-length
+    grouping and row filters.
 
     One representational caveat (gated by the bit-identity test): a pair
     whose cosine is NaN (possible only from NaN/overflowing inputs) is
@@ -541,12 +542,14 @@ def _pairs_cosine_arrow(
         # it, for EVERY partner), so they are filtered in the JVM — which
         # also keeps the Arrow batch free of NULL list elements (Arrow ->
         # pandas turns those into NaN, which has the OPPOSITE threshold
-        # semantics: NaN keeps, NULL drops)
+        # semantics: NaN keeps, NULL drops).  A NULL norm likewise makes
+        # every cosine NULL, and would reach numpy as NaN
         .where(
             F.col("vid").isNotNull()
             & F.col("blk").isNotNull()
             & F.col("v").isNotNull()
             & ~F.exists("v", lambda x: x.isNull())
+            & F.col("nrm").isNotNull()
         )
         .withColumn("__g", g)
         .withColumn(

@@ -5,15 +5,40 @@ Input: a T1 `pipelines` DataFrame (pipeline_id, name,
 geometry ARRAY<STRUCT<lon,lat>>).  Output: a dict of DataFrames mirroring the
 reference's result envelope (:885-897).
 
-DAG (SURVEY.md §3): pipelines -> vertices -> lengths
-                                   \\-> segments (cached: 3 downstream uses)
-                                         -> distance join -> sessions ->
+DAG (SURVEY.md §3): pipelines -> vertices -> lengths -> totals
+                                   \\-> segments -> distance join (pairs)
+                                         -> sessions (kept_hits) ->
                                             {sections+corridors, per-pipeline
-                                             rollup, effective length}
+                                             rollup, effective -> summary}
 
-The reference mutates pipeline dicts in place to attach segments (:298) and
-re-walks them three times; here `segments` is computed once and cached —
-the explicit-DAG equivalent (SURVEY.md §7 'hard parts').
+Every frame read more than once is persisted (tracked, so
+``caching.release_caches`` frees it after the last export):
+
+- ``lengths``: ``totals``, ``effective``, the CSV and JSON exports;
+- ``totals``: the CLI's totals line and the TXT summary;
+- ``segments``: both sides of the pairs self-join and the op-21
+  effective-length join;
+- ``pairs``: sessionization and the op-21 neighbour count;
+- ``kept_hits``: the section aggregates, the corridor kernel and the
+  per-pipeline rollup;
+- ``sections``: the CLI's top-k table, the CSV and JSON exports and the
+  corridor KML loop;
+- ``summary``: the CLI's effective line, the JSON and TXT exports.
+
+So each pandas kernel (segmentize, corridor) runs once per analysis, not
+once per consumer.  The reference mutates pipeline dicts in place to attach
+segments (:298) and re-walks them three times; the caches are the
+explicit-DAG equivalent (SURVEY.md §7 'hard parts').
+
+The persists are registered with
+``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`` on, so AQE
+may coalesce each cached plan's shuffle output by its measured size
+instead of keeping ``spark.sql.shuffle.partitions`` blocks: every later
+read of a cache then runs one task per coalesced block, and every task
+of a consumer that calls Python pays a worker start-up.  Spark reads the
+conf when ``persist()`` builds the cached plan, not when an action runs,
+so it is scoped to the persist calls alone and no other query on the
+session sees it.
 """
 
 from __future__ import annotations
@@ -33,6 +58,18 @@ from ..functions.geodesy import haversine_m
 from ..operators.corridor import corridor_polygons
 from ..operators.segmentize import segmentize
 from ..operators.spatial import distance_self_join
+from ..session import scoped_conf
+
+
+def _persist(df: DataFrame) -> DataFrame:
+    """``persist_tracked`` with AQE free to coalesce the cached plan's
+    output partitions (see the module docstring)."""
+    with scoped_conf(
+        df.sparkSession,
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+        "true",
+    ):
+        return persist_tracked(df)
 
 
 def _clamp_params(detection_range, min_parallel, segment_length, angular_tol):
@@ -98,7 +135,6 @@ def analyze_pipelines(
             detection_range_m, min_parallel_m, segment_length_m, angular_tolerance_deg
         )
     )
-    spark = pipelines.sparkSession
 
     # vertices: posexplode of the geometry column
     vertices = pipelines.select(
@@ -114,7 +150,7 @@ def analyze_pipelines(
             F.lag("lat").over(w), F.lag("lon").over(w), F.col("lat"), F.col("lon")
         ).alias("hop_m"),
     )
-    lengths = (
+    lengths = _persist(
         hops.groupBy("pipeline_id")
         .agg(F.coalesce(F.sum("hop_m"), F.lit(0.0)).alias("length_m"))
         .join(pipelines.select("pipeline_id", "name"), "pipeline_id")
@@ -123,25 +159,26 @@ def analyze_pipelines(
             (F.col("length_m") / US_SURVEY_MILE_M).alias("length_mi"),
         )
     )
-    totals = lengths.agg(
-        F.sum("length_m").alias("total_m"),
-        (F.sum("length_m") / US_SURVEY_MILE_M).alias("total_mi"),
-        F.count(F.lit(1)).cast("bigint").alias("n_pipelines"),
+    totals = _persist(
+        lengths.agg(
+            F.sum("length_m").alias("total_m"),
+            (F.sum("length_m") / US_SURVEY_MILE_M).alias("total_mi"),
+            F.count(F.lit(1)).cast("bigint").alias("n_pipelines"),
+        )
     )
 
-    # op 11: 5 m segments — persisted: reused by ops 12, 18 and 21.
+    # op 11: 5 m segments — persisted: reused by ops 12 and 21.
     # MEMORY_AND_DISK_DESER (== DataFrame cache()): corpus-scale segment
     # state spills to disk instead of evicting and re-running the pandas-UDF
-    # resampler; deserialized storage keeps re-reads cheap.  Tracked so
-    # release_caches() frees it once the result envelope is materialized.
-    segments = persist_tracked(segmentize(vertices, segment_length_m))
+    # resampler; deserialized storage keeps re-reads cheap.
+    segments = _persist(segmentize(vertices, segment_length_m))
 
     # op 12: distance + bearing self-join — persisted: BOTH the
     # sessionization branch and the op-21 neighbor branch consume it, and
     # without persistence the plan's most expensive shuffle (grid join +
     # 9x neighbor explode + haversine recheck) executed once per branch
     # (review r06)
-    pairs = persist_tracked(
+    pairs = _persist(
         distance_self_join(
             segments,
             detection_range_m,
@@ -170,14 +207,16 @@ def analyze_pipelines(
     # HAVING: sections >= min_parallel (:425,429); keep hit rows of kept
     # sections for corridor geometry + rollups
     wsec = Window.partitionBy("p1", "p2", "section")
-    kept_hits = persist_tracked(
+    kept_hits = _persist(
         hits.withColumn("sec_n", F.count(F.lit(1)).over(wsec))
         .where(F.col("sec_n") * segment_length_m >= min_parallel_m)
         .drop("sec_n", "is_new")
     )
 
-    # op 15 aggregates + ops 16-17 corridor geometry
-    sections = (
+    # op 15 aggregates + ops 16-17 corridor geometry — persisted: the
+    # corridor kernel is the plan's costliest Python stage, and four
+    # consumers read the table
+    sections = _persist(
         kept_hits.groupBy("p1", "p2", "section")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_hits"),
@@ -250,12 +289,14 @@ def analyze_pipelines(
     )
 
     # op 22 envelope: clamps + savings + parameter echo (:872-896)
-    summary = overlap_summary(
-        effective,
-        detection_range_m,
-        min_parallel_m,
-        segment_length_m,
-        angular_tolerance_deg,
+    summary = _persist(
+        overlap_summary(
+            effective,
+            detection_range_m,
+            min_parallel_m,
+            segment_length_m,
+            angular_tolerance_deg,
+        )
     )
 
     return {

@@ -225,3 +225,49 @@ def test_arrow_assign_bit_identical_to_hof(spark, sf_dir):
         .select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec"))
     )
     assert_same(emb, seeds, "float32-corpus")
+
+
+def test_arrow_kernel_sliced_list_batch_matches_slow_lane():
+    """Regression: the fast lane must read a sliced ListArray
+    (offset != 0) through its offsets.  The same rows with a NULL vector
+    appended take the per-row slow lane; both lanes must agree bit for
+    bit on every real row."""
+    import pyarrow as pa
+
+    from pipeline_calculator_v3_spark.operators.kmeans import _kernel_batches
+
+    schema = pa.schema([
+        pa.field("vid", pa.int64()),
+        pa.field("v", pa.list_(pa.float64())),
+        pa.field("cid", pa.int64()),
+        pa.field("sqd", pa.float64()),
+    ])
+    cids = [10, 20, 30]
+    C = np.array([[0.0, 0.0], [1.0, 2.0], [-3.0, 0.5]])
+    vecs = [[9.0, 9.0], [8.0, 8.0], [1.0, 2.1], [-2.5, 0.0], [0.1, -0.1]]
+    full = pa.array(vecs, pa.list_(pa.float64()))
+    sliced = full.slice(2)
+    assert sliced.offset == 2
+    fast = pa.RecordBatch.from_arrays(
+        [pa.array([3, 4, 5], pa.int64()), sliced], names=["vid", "v"]
+    )
+    slow = pa.RecordBatch.from_arrays(
+        [
+            pa.array([3, 4, 5, 6], pa.int64()),
+            pa.array(vecs[2:] + [None], pa.list_(pa.float64())),
+        ],
+        names=["vid", "v"],
+    )
+
+    def run(batch):
+        (out,) = _kernel_batches([batch], cids, C, 1024, schema)
+        return list(zip(out.column("vid").to_pylist(),
+                        out.column("cid").to_pylist(),
+                        out.column("sqd").to_pylist()))
+
+    got = run(fast)
+    want = run(slow)[:3]
+    assert [r[:2] for r in got] == [(3, 20), (4, 30), (5, 10)]
+    assert [(v, c, s.hex()) for v, c, s in got] == [
+        (v, c, s.hex()) for v, c, s in want
+    ]

@@ -8,8 +8,12 @@ import math
 
 import pytest
 
+from pipeline_calculator_v3_spark import caching
+from pipeline_calculator_v3_spark.caching import release_caches
 from pipeline_calculator_v3_spark.functions.geodesy import EARTH_RADIUS_M
 from pipeline_calculator_v3_spark.plans.overlap import analyze_pipelines
+from pipeline_calculator_v3_spark.session import scoped_conf
+from tests.compare import assert_frames_match
 
 DEG_PER_M_LAT = 180.0 / (math.pi * EARTH_RADIUS_M)
 T1_SCHEMA = (
@@ -55,19 +59,18 @@ def test_g1_lengths_and_no_overlap(g1):
     assert s.savings_m == 0.0
 
 
-@pytest.fixture(scope="module")
-def g2(spark):
+def _g2_rows():
     # G2: two parallel lines 10 m apart, 400 m long -> one bundled section
     lon_off = 10.0 / (111320.0 * math.cos(math.radians(31.5)))
-    return analyze_pipelines(
-        _pipes(
-            spark,
-            [
-                (1, "A", line(-103.5, 31.5, 400.01)),
-                (2, "B", line(-103.5 - lon_off, 31.5, 400.01)),
-            ],
-        )
-    )
+    return [
+        (1, "A", line(-103.5, 31.5, 400.01)),
+        (2, "B", line(-103.5 - lon_off, 31.5, 400.01)),
+    ]
+
+
+@pytest.fixture(scope="module")
+def g2(spark):
+    return analyze_pipelines(_pipes(spark, _g2_rows()))
 
 
 def test_g2_overlap_positive(g2):
@@ -96,20 +99,19 @@ def test_g2_per_pipeline_rollup(g2):
     assert all(60 <= v <= 80 for v in roll.values())
 
 
-@pytest.fixture(scope="module")
-def g4(spark):
+def _g4_rows():
     # G4: three parallel 400 m lines, 8 m spacing -> k=3 in the middle
     lon8 = 8.0 / (111320.0 * math.cos(math.radians(31.5)))
-    return analyze_pipelines(
-        _pipes(
-            spark,
-            [
-                (1, "A", line(-103.5, 31.5, 400.01)),
-                (2, "B", line(-103.5 - lon8, 31.5, 400.01)),
-                (3, "C", line(-103.5 - 2 * lon8, 31.5, 400.01)),
-            ],
-        )
-    )
+    return [
+        (1, "A", line(-103.5, 31.5, 400.01)),
+        (2, "B", line(-103.5 - lon8, 31.5, 400.01)),
+        (3, "C", line(-103.5 - 2 * lon8, 31.5, 400.01)),
+    ]
+
+
+@pytest.fixture(scope="module")
+def g4(spark):
+    return analyze_pipelines(_pipes(spark, _g4_rows()))
 
 
 def test_g4_three_way_cluster(g4):
@@ -135,3 +137,66 @@ def test_parameter_echo_and_clamps(spark):
     assert s.param_min_parallel_m == 10.0
     assert s.param_segment_length_m == 1.0
     assert s.param_angular_tolerance_deg == 90.0
+
+
+ENVELOPE = ("lengths", "sections", "per_pipeline_overlap", "summary")
+
+
+def _envelope_at(spark, rows, shuffle_partitions):
+    """The analysis of ``rows`` built and collected at one shuffle
+    partition count; the caches are released before returning."""
+    with scoped_conf(spark, "spark.sql.shuffle.partitions",
+                     str(shuffle_partitions)):
+        res = analyze_pipelines(_pipes(spark, rows))
+        out = {name: res[name].toPandas() for name in ENVELOPE}
+    release_caches(spark)
+    return out
+
+
+def _polygons_as_text(pdf):
+    # polygon columns are arrays of structs; compare them exactly, as text
+    for c in ("oriented_polygon", "corridor_polygon"):
+        pdf[c] = pdf[c].map(lambda ring: repr([tuple(p) for p in ring]))
+    return pdf
+
+
+@pytest.mark.parametrize("rows", [_g2_rows, _g4_rows], ids=["g2", "g4"])
+def test_envelope_invariant_under_shuffle_partitions(spark, rows):
+    """AQE may coalesce the cached frames to any partition count; the
+    envelope, corridor polygons included, must not depend on it."""
+    a = _envelope_at(spark, rows(), 4)
+    b = _envelope_at(spark, rows(), 32)
+    assert len(a["sections"]) > 0
+    for name in ENVELOPE:
+        if name == "sections":
+            a[name], b[name] = _polygons_as_text(a[name]), _polygons_as_text(b[name])
+        assert_frames_match(a[name], b[name])
+
+
+def _scan_root(df):
+    """First physical operator of ``df``'s plan below the AQE wrapper and
+    any columnar-to-row conversion."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    names = [ln.lstrip(" +-:*()0123456789").split(" ")[0]
+             for ln in plan.splitlines()]
+    return next(n for n in names
+                if n not in ("AdaptiveSparkPlan", "ColumnarToRow"))
+
+
+def test_consumers_read_cached_frames(spark):
+    """The tables the CLI and sinks read more than once are served from
+    their caches, and AQE coalesced every cached frame (segments, pairs
+    and kept_hits included) below the session's shuffle partition count."""
+    release_caches(spark)
+    res = analyze_pipelines(_pipes(spark, _g2_rows()))
+    cached = list(caching._TRACKED_DFS)
+    # lengths, totals, segments, pairs, kept_hits, sections, summary
+    assert len(cached) == 7
+    for name in ("lengths", "totals", "sections", "summary"):
+        assert _scan_root(res[name]) == "InMemoryTableScan", name
+        res[name].collect()
+    res["per_pipeline_overlap"].collect()  # materializes pairs / kept_hits
+    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    for df in cached:
+        assert df.rdd.getNumPartitions() < n_shuffle, df.columns
+    release_caches(spark)

@@ -112,6 +112,28 @@ def test_xl_twin_planted_recall(spark, sf_dir):
     assert row.n_clusters == n_base
 
 
+def _join_pairs(labeled, thr, G):
+    """The salted self-join + HOF cosine spelling the Arrow pair kernel
+    replaced: the reference semantics its tests compare against."""
+    from pyspark.sql import functions as F
+
+    from pipeline_calculator_v3_spark.functions.vectors import dot
+    from pipeline_calculator_v3_spark.operators.joins import salted_self_pairs
+
+    pairs = salted_self_pairs(labeled, "blk", "vid", n_groups=G).where(
+        F.col("a_vid") < F.col("b_vid")
+    )
+    cos = dot(F.col("a_v"), F.col("b_v")) / F.nullif(
+        F.col("a_nrm") * F.col("b_nrm"), F.lit(0.0)
+    )
+    return pairs.select(
+        F.col("a_vid").alias("id1"),
+        F.col("b_vid").alias("id2"),
+        F.col("a_blk").alias("cluster_id"),
+        cos.alias("cos_sim"),
+    ).where(F.col("cos_sim") >= thr)
+
+
 def test_arrow_pair_kernel_matches_salted_join(spark):
     """r15 Arrow pair-stage gate: _pairs_cosine_arrow must produce the
     IDENTICAL pair set as the salted self-join + HOF cosine spelling it
@@ -122,25 +144,10 @@ def test_arrow_pair_kernel_matches_salted_join(spark):
     pandas->Arrow coercion — so NaN-old may read NULL-new.)"""
     from pyspark.sql import functions as F
 
-    from pipeline_calculator_v3_spark.functions.vectors import dot, norm
-    from pipeline_calculator_v3_spark.operators.joins import salted_self_pairs
+    from pipeline_calculator_v3_spark.functions.vectors import norm
     from pipeline_calculator_v3_spark.operators.similarity import (
         _pairs_cosine_arrow,
     )
-
-    def old_pairs(labeled, thr, G):
-        pairs = salted_self_pairs(labeled, "blk", "vid", n_groups=G).where(
-            F.col("a_vid") < F.col("b_vid")
-        )
-        cos = dot(F.col("a_v"), F.col("b_v")) / F.nullif(
-            F.col("a_nrm") * F.col("b_nrm"), F.lit(0.0)
-        )
-        return pairs.select(
-            F.col("a_vid").alias("id1"),
-            F.col("b_vid").alias("id2"),
-            F.col("a_blk").alias("cluster_id"),
-            cos.alias("cos_sim"),
-        ).where(F.col("cos_sim") >= thr)
 
     def check(labeled, thr, G, tag):
         a = {
@@ -151,7 +158,7 @@ def test_arrow_pair_kernel_matches_salted_join(spark):
         b = {
             (r.id1, r.id2): (r.cluster_id,
                              None if r.cos_sim is None else r.cos_sim.hex())
-            for r in old_pairs(labeled, thr, G).collect()
+            for r in _join_pairs(labeled, thr, G).collect()
         }
         assert set(a) == set(b), (tag, set(a) ^ set(b))
         for k in a:
@@ -197,6 +204,31 @@ def test_arrow_pair_kernel_matches_salted_join(spark):
     ).withColumn("nrm", norm(F.col("v")))
     check(big, 0.5, 4, "random-thr0.5")
     check(big, 0.0, 4, "random-thr0.0")
+
+
+def test_arrow_pair_kernel_drops_null_norm(spark):
+    """Regression: a row whose ``nrm`` is NULL has a NULL cosine
+    with every partner, so the join spelling emits no pair for it; the
+    Arrow kernel must not turn the NULL into a kept NaN."""
+    from pipeline_calculator_v3_spark.operators.similarity import (
+        _pairs_cosine_arrow,
+    )
+
+    labeled = spark.createDataFrame(
+        [
+            (1, [1.0, 0.0], 0, 1.0),
+            (2, [1.0, 0.0], 0, None),
+            (3, [1.0, 0.0], 0, 1.0),
+        ],
+        "vid long, v array<double>, blk int, nrm double",
+    )
+    for thr in (0.5, -2.0):
+        got = {
+            (r.id1, r.id2)
+            for r in _pairs_cosine_arrow(labeled, thr, 2, "cluster_id").collect()
+        }
+        want = {(r.id1, r.id2) for r in _join_pairs(labeled, thr, 2).collect()}
+        assert got == want == {(1, 3)}, (thr, got, want)
 
 
 def test_pair_kernel_dispatch_identical(spark, sf_dir):
